@@ -68,12 +68,30 @@ def minhash_signature(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
     # at crawl scale the scan already has >= dp partitions and no shuffle of
     # text payload is added (r6).
     dp = docs.sparkSession.sparkContext.defaultParallelism
-    if not d.isStreaming and d.rdd.getNumPartitions() < dp:
+    if not d.isStreaming and _narrow_input(d, dp):
         d = d.repartition(dp)
     sig = d.select(id_col, mh(F.col(text_col)).alias("bands"))
     return sig.select(
         id_col, *[F.col("bands")[b].alias(f"band{b}") for b in range(n_bands)]
     )
+
+
+def _narrow_input(df: DataFrame, dp: int) -> bool:
+    """Whether ``df``'s input has fewer than ``dp`` partitions, judged from
+    the logical plan alone (no physical planning, no RDD conversion). A
+    materialized cache reports its partition count exactly. Any other input
+    is judged the way Spark splits files: the scan reaches ``dp`` partitions
+    once it holds ``dp × spark.sql.files.openCostInBytes`` bytes."""
+    qe = df._jdf.queryExecution()
+    seq = qe.withCachedData().collectLeaves()
+    leaves = [seq.apply(i) for i in range(seq.length())]
+    caches = [leaf.cacheBuilder() for leaf in leaves
+              if leaf.getClass().getSimpleName() == "InMemoryRelation"]
+    if len(caches) == len(leaves) and all(c.isCachedColumnBuffersLoaded() for c in caches):
+        return sum(c.cachedColumnBuffers().getNumPartitions() for c in caches) < dp
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(qe.optimizedPlan().stats().sizeInBytes())
+    return size < dp * conf.filesOpenCostInBytes()
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", n_bands: int = 8,

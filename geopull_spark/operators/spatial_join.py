@@ -28,8 +28,11 @@ skew-join (BASELINE.json north_star requirement).
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -128,9 +131,26 @@ def build_block_cell_index(blocks: DataFrame, res: int = INDEX_RES,
     return blocks.select("region_code", "block_id", "geometry").mapInPandas(gen, schema)
 
 
+_RES_LISTS = weakref.WeakKeyDictionary()  # persisted index frame → its res list
+
+
 def index_res_list(block_cells: DataFrame) -> list[int]:
     """Distinct cover resolutions present in an index (usually one; more when
-    adaptive lowering kicked in). Tiny metadata aggregate."""
+    adaptive lowering kicked in). Tiny metadata aggregate, collected once per
+    PERSISTED index frame: its rows are fixed while the cache holds them, and
+    every doc batch assigned against it would otherwise pay the same driver
+    round-trip. The memo lives as long as the frame object does; a frame that
+    is not persisted (or was unpersisted since) is collected on every call."""
+    if block_cells.storageLevel == StorageLevel.NONE:
+        _RES_LISTS.pop(block_cells, None)
+        return _collect_res_list(block_cells)
+    res = _RES_LISTS.get(block_cells)
+    if res is None:
+        res = _RES_LISTS[block_cells] = _collect_res_list(block_cells)
+    return list(res)
+
+
+def _collect_res_list(block_cells: DataFrame) -> list[int]:
     return sorted(r["cell_res"] for r in block_cells.select("cell_res").distinct().collect())
 
 

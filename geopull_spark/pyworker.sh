@@ -14,7 +14,11 @@
 # imports the pip-installed pyspark (version-identical to the JVM) from
 # site-packages, exactly as the driver process does.
 #
-# Used as spark.pyspark.python by geopull_spark.session.get_spark (opt-out:
+# Used as spark.pyspark.python by geopull_spark.session.get_spark, which sets
+# GEOPULL_BASE_PYTHON (the configured PYSPARK_PYTHON, else the driver's own
+# interpreter) and engages this wrapper only when the driver imports pyspark
+# from outside an archive: with pyspark served from SPARK_HOME's pyspark.zip
+# alone, stripping the zip would leave workers unable to import it (opt-out:
 # GEOPULL_WORKER_PYTHON=python). Pure POSIX sh; no external dependencies.
 _stripped=""
 _old_ifs="$IFS"

@@ -8,7 +8,10 @@ kernels, shuffle partitions sized to cores rather than the 200 default.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
+import pyspark
 from pyspark.sql import SparkSession
 
 
@@ -36,6 +39,14 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Persisted plans get the same AQE final-stage sizing as any other
+        # plan. The default (false) keeps a cached plan's output at the full
+        # spark.sql.shuffle.partitions, so every persisted doc-batch result
+        # ran its refine cogroup as that many near-empty Python tasks, and
+        # an append of it wrote that many tiny files for every later scan
+        # to open. Explicit repartition(n) exchanges stay at n: AQE never
+        # coalesces REPARTITION_BY_NUM.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # co-partitioned assignment plan (spatial_join.py): both join sides
         # hash by pcell (a prefix function of the cell join key) so the
         # refine cogroup reuses the join partitioning. The default
@@ -63,30 +74,53 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
     )
-    # Python workers launch through a PYTHONPATH-sanitizing wrapper: with
-    # pyspark.zip (and inherited jars) on the worker path, CPython 3.11's
-    # eager zipimport invalidation costs ~150 ms PER TASK inside pyspark's
-    # setup_spark_files (one TOC re-parse per cached zip finder — measured,
-    # see pyworker.sh). The wrapper strips archive entries so workers import
-    # the pip pyspark from site-packages like the driver does. Opt out with
-    # GEOPULL_WORKER_PYTHON=python (or any interpreter path).
-    worker_py = os.environ.get("GEOPULL_WORKER_PYTHON")
-    if worker_py is None:
-        wrapper = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker.sh")
-        if os.access(wrapper, os.X_OK):
-            # wrap whatever interpreter was configured (default "python")
-            prev = os.environ.get("PYSPARK_PYTHON")
-            if prev and os.path.basename(prev) != "pyworker.sh":
-                os.environ["GEOPULL_BASE_PYTHON"] = prev
-            worker_py = wrapper
+    worker_py = _worker_python()
     if worker_py:
-        # pyspark resolves the worker interpreter from PYSPARK_PYTHON at
-        # SparkContext init (spark.pyspark.python alone is not consulted by
-        # the in-process python driver), so set both.
-        os.environ["PYSPARK_PYTHON"] = worker_py
         b = b.config("spark.pyspark.python", worker_py)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _pyspark_zipped() -> bool:
+    """True when this interpreter imports pyspark from an archive (a
+    SPARK_HOME ``python/lib/pyspark.zip`` deployment with no pip install)."""
+    return isinstance(getattr(pyspark, "__loader__", None), zipimport.zipimporter)
+
+
+def _worker_python() -> str | None:
+    """Python-worker interpreter; sets ``PYSPARK_PYTHON`` (and, for the
+    wrapper, ``GEOPULL_BASE_PYTHON``) to match and returns it, or returns
+    None to leave pyspark's own choice alone.
+
+    Workers launch through a PYTHONPATH-sanitizing wrapper: with pyspark.zip
+    (and inherited jars) on the worker path, CPython 3.11's eager zipimport
+    invalidation costs ~150 ms PER TASK inside pyspark's setup_spark_files
+    (one TOC re-parse per cached zip finder — measured, see pyworker.sh).
+    The wrapper strips archive entries so workers import pyspark from
+    site-packages like the driver does — so it is engaged only when the
+    driver itself imports pyspark from outside an archive; where pyspark
+    exists only as pyspark.zip, stripping it would leave workers unable to
+    import it. The wrapped interpreter is the configured PYSPARK_PYTHON, or
+    the driver's own interpreter when none is configured (a bare ``python``
+    may be missing or a different installation). Opt out with
+    GEOPULL_WORKER_PYTHON=python (or any interpreter path)."""
+    worker_py = os.environ.get("GEOPULL_WORKER_PYTHON")
+    if worker_py is None:
+        wrapper = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker.sh")
+        if _pyspark_zipped() or not os.access(wrapper, os.X_OK):
+            return None
+        prev = os.environ.get("PYSPARK_PYTHON")
+        if prev and os.path.basename(prev) != "pyworker.sh":
+            os.environ["GEOPULL_BASE_PYTHON"] = prev
+        else:
+            os.environ.setdefault("GEOPULL_BASE_PYTHON", sys.executable)
+        worker_py = wrapper
+    if worker_py:
+        # pyspark resolves the worker interpreter from PYSPARK_PYTHON at
+        # SparkContext init (spark.pyspark.python alone is not consulted by
+        # the in-process python driver), so set both.
+        os.environ["PYSPARK_PYTHON"] = worker_py
+    return worker_py or None

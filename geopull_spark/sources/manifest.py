@@ -80,8 +80,8 @@ class SnapshotTable:
         for c in bloom_cols or []:
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer.parquet(data_dir)
-        spark = df.sparkSession
-        written = spark.read.parquet(data_dir)
+        written = df.sparkSession.read.parquet(data_dir)
+        footer_rows, file_stats = _read_footers(data_dir)
         if partition_count_col and partition_count_col in written.columns:
             counts = {
                 str(r[0]): r[1]
@@ -90,7 +90,7 @@ class SnapshotTable:
             row_count = sum(counts.values())
         else:
             counts = {}
-            row_count = written.count()
+            row_count = footer_rows
         manifest = {
             "snapshot_id": sid,
             "parent_id": prev["snapshot_id"] if prev else None,
@@ -103,7 +103,7 @@ class SnapshotTable:
             "schema": written.schema.jsonValue(),
             "lineage": lineage or [],
             "operation": "overwrite",
-            "file_stats": _harvest_file_stats(data_dir),
+            "file_stats": file_stats,
         }
         self._write_manifest(manifest)
         return manifest
@@ -141,9 +141,11 @@ class SnapshotTable:
         from pyspark.sql import types as T
 
         prev_schema = T.StructType.fromJson(prev["schema"])
-        # compare names+types only: nullability legitimately drifts across
-        # parquet round-trips and does not affect union-read correctness
-        _sig = lambda s: [(f.name, f.dataType) for f in s.fields]
+        # compare names+types only: nullability — top-level and nested
+        # (containsNull, valueContainsNull, struct fields) — legitimately
+        # drifts across parquet round-trips and does not affect union-read
+        # correctness
+        _sig = lambda s: [(f.name, _nullable(f.dataType)) for f in s.fields]
         if _sig(df.schema) != _sig(prev_schema):
             raise ValueError(
                 "append: batch schema does not match the table schema — "
@@ -160,11 +162,10 @@ class SnapshotTable:
         for c in bloom_cols or []:
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer.parquet(delta_dir)
-        spark = df.sparkSession
-        delta_rows = spark.read.parquet(delta_dir).count()
+        delta_rows, delta_stats = _read_footers(delta_dir)
         prev_files = prev.get("files") or _list_parquet(prev["data_dir"])
         stats = dict(prev.get("file_stats") or {})
-        stats.update(_harvest_file_stats(delta_dir))
+        stats.update(delta_stats)
         manifest = {
             "snapshot_id": sid,
             "parent_id": prev["snapshot_id"],
@@ -316,7 +317,7 @@ class SnapshotTable:
             "files": _list_parquet(data_dir),
             "schema": rewritten.schema.jsonValue(),
             "operation": "compact",
-            "file_stats": _harvest_file_stats(data_dir),  # not the old files'
+            "file_stats": _read_footers(data_dir)[1],  # not the old files'
         }
         self._write_manifest(manifest)
         return manifest
@@ -329,20 +330,25 @@ def _list_parquet(data_dir: str) -> list[str]:
     )
 
 
-def _harvest_file_stats(data_dir: str) -> dict:
-    """Per-file column min/max from parquet footers (metadata-only I/O —
-    a few KB per file regardless of data size), keyed by FULL path so
-    appended snapshots can union stats across data dirs. Top-level
-    primitive int/float/string columns only; others are simply absent from
-    the stats map, which read_range treats as 'must read'."""
+def _read_footers(data_dir: str) -> tuple[int, dict]:
+    """(row count, per-file column min/max) of a data dir, from the parquet
+    footers alone (metadata-only I/O — a few KB per file regardless of data
+    size; each footer is opened once). The row count is the footers'
+    ``num_rows`` sum, so the writers never re-scan what they just wrote; an
+    unreadable footer raises, failing the write before the pointer swap
+    rather than counting its file as 0 rows.
+
+    Stats are keyed by FULL path so appended snapshots can union them across
+    data dirs. Top-level primitive int/float/string columns only; others are
+    simply absent from the stats map, which read_range treats as 'must
+    read'."""
     import pyarrow.parquet as pq
 
+    rows = 0
     stats: dict[str, dict] = {}
     for fpath in _list_parquet(data_dir):
-        try:
-            md = pq.ParquetFile(fpath).metadata
-        except Exception:
-            continue  # unreadable footer → no stats, never block the commit
+        md = pq.read_metadata(fpath)
+        rows += md.num_rows
         per_col: dict[str, list] = {}
         for rg in range(md.num_row_groups):
             row = md.row_group(rg)
@@ -368,7 +374,23 @@ def _harvest_file_stats(data_dir: str) -> dict:
                 else:
                     per_col[name] = [mn, mx]
         stats[fpath] = per_col
-    return stats
+    return rows, stats
+
+
+def _nullable(dt):
+    """``dt`` with every nested nullability flag set (array elements, map
+    values, struct fields) and nested field metadata dropped: the shape
+    Spark's parquet reader reports, so schemas compare on names and types."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True)
+                             for f in dt.fields])
+    return dt
 
 
 def _conform_to_schema(df: DataFrame, schema_json: dict) -> DataFrame:

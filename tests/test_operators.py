@@ -990,3 +990,29 @@ def test_ngram_logprob_properties(spark):
     mean2 = out[2]["logprob"] / out[2]["n_bigrams"]
     assert mean1 > mean2  # common phrasing scores higher per bigram
     assert out[1]["n_bigrams"] == 59 and out[2]["n_bigrams"] == 7
+
+
+def test_minhash_spread_decision(spark, tmp_path):
+    """The signature pass spreads to defaultParallelism only when its input
+    is narrower: never over a materialized cache that already has at least
+    defaultParallelism partitions, always over a one-file parquet scan."""
+    dp = spark.sparkContext.defaultParallelism
+
+    def spreads(d):
+        plan = dedup.minhash_signature(d)._jdf.queryExecution().optimizedPlan().toString()
+        return "Repartition" in plan
+
+    wide = spark.range(2000).select(
+        F.col("id").cast("string").alias("doc_id"), F.lit("some text here").alias("text"),
+    ).repartition(4 * dp).cache()
+    try:
+        wide.count()
+        assert not dedup._narrow_input(wide.filter(F.col("doc_id") > "1"), dp)
+        assert not spreads(wide.filter(F.col("doc_id") > "1"))
+    finally:
+        wide.unpersist()
+    path = str(tmp_path / "one.parquet")
+    spark.range(50).select(
+        F.col("id").cast("string").alias("doc_id"), F.lit("x y z").alias("text"),
+    ).coalesce(1).write.parquet(path)
+    assert spreads(spark.read.parquet(path))

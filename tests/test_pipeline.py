@@ -643,3 +643,114 @@ def test_post_blocks_batched_bit_identical(world):
         a, b = list(ref[col]), list(fast[col])
         for i, (x, y) in enumerate(zip(a, b)):
             assert x == y, f"col {col} row {i}: {x!r} != {y!r}"
+
+
+def _jobs_in_group(spark, fn):
+    """Spark jobs started by ``fn()``, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"t-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_index_res_list_collected_once_per_persisted_index(spark, world):
+    """A persisted index's cover resolutions are collected once; a second
+    call starts no Spark job. An unpersisted index is collected again."""
+    bc = spatial_join.build_block_cell_index(world["blocks"]).persist()
+    try:
+        bc.count()
+        first = spatial_join.index_res_list(bc)
+        assert first == sorted({r[0] for r in bc.select("cell_res").collect()})
+        assert _jobs_in_group(spark, lambda: spatial_join.index_res_list(bc)) == 0
+        assert spatial_join.index_res_list(bc) == first
+    finally:
+        bc.unpersist()
+    assert _jobs_in_group(spark, lambda: spatial_join.index_res_list(bc)) > 0
+    plain = spatial_join.build_block_cell_index(world["blocks"])
+    assert spatial_join.index_res_list(plain) == first
+    assert _jobs_in_group(spark, lambda: spatial_join.index_res_list(plain)) > 0
+
+
+def test_persisted_assignment_identical(spark, world):
+    """A persisted assign result (whose cached plan AQE may now coalesce)
+    holds exactly the rows of the unpersisted one."""
+    docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
+    bc = spatial_join.build_block_cell_index(world["blocks"]).persist()
+    try:
+        plain = sorted(map(tuple, spatial_join.assign_docs_to_blocks(
+            docs, world["blocks"], bc).collect()))
+        cached = spatial_join.assign_docs_to_blocks(docs, world["blocks"], bc).persist()
+        try:
+            assert cached.count() == len(plain) > 0
+            assert sorted(map(tuple, cached.collect())) == plain
+        finally:
+            cached.unpersist()
+    finally:
+        bc.unpersist()
+
+
+def test_manifest_row_counts_from_footers(spark, tmp_path):
+    """append's and commit's row_count come from the parquet footers and
+    equal what read() returns: for an 8-file batch and for an empty one.
+    Appending a persisted batch runs just the write job."""
+    from geopull_spark.sources.manifest import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "rc"))
+    s1 = t.commit(spark.range(0, 300).repartition(3), "fp0")
+    assert s1["row_count"] == t.read(spark).count() == 300
+    batch = spark.range(300, 1100).repartition(8).persist()
+    batch.count()
+    n_jobs = _jobs_in_group(spark, lambda: t.append(batch, "fp1"))
+    batch.unpersist()
+    s2 = t.current_snapshot()
+    assert len(s2["files"]) - len(s1["files"]) == 8
+    assert s2["row_count"] == t.read(spark).count() == 1100
+    assert n_jobs == 1
+    s3 = t.append(spark.range(0).repartition(8), "fp2")
+    assert s3["row_count"] == t.read(spark).count() == 1100
+    assert t.commit(spark.range(0), "fp3")["row_count"] == t.read(spark).count() == 0
+
+
+def test_manifest_unreadable_footer_raises(tmp_path):
+    """A data file whose footer cannot be read fails the count instead of
+    counting as 0 rows."""
+    from geopull_spark.sources.manifest import _read_footers
+
+    (tmp_path / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        _read_footers(str(tmp_path))
+
+
+def test_manifest_append_nested_nullability(spark, tmp_path):
+    """Nested nullability (array containsNull, map valueContainsNull,
+    struct field nullable) drifts across the parquet round trip and must
+    not reject an append; a real nested type mismatch still does."""
+    from geopull_spark.sources.manifest import SnapshotTable
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            "id",
+            F.array(F.col("id"), F.lit(1)).alias("sig"),
+            F.create_map(F.lit("k"), F.col("id")).alias("m"),
+            F.struct(F.col("id").alias("x")).alias("s"),
+        )
+
+    t = SnapshotTable(str(tmp_path / "nest"))
+    t.commit(frame(0, 10), "fp0")
+    batch = frame(10, 15)
+    assert not batch.schema["sig"].dataType.containsNull
+    assert t.append(batch, "fp1")["row_count"] == t.read(spark).count() == 15
+    wrong = spark.range(15, 20).select(
+        "id",
+        F.array(F.col("id").cast("string")).alias("sig"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.struct(F.col("id").alias("x")).alias("s"),
+    )
+    with pytest.raises(ValueError, match="schema does not match"):
+        t.append(wrong, "fp2")
